@@ -8,11 +8,30 @@ Scale note: on a production cluster these would be directories of many
 parquet files (optionally partitioned, e.g. ``events`` by day); every reader
 here goes through ``spark.read.parquet`` so partition discovery, predicate
 pushdown and column pruning apply unchanged at 100 TB.
+
+Metadata cache contract.  Resolving a parquet path normally runs a
+one-task Spark job to read a footer and infer the schema; ``parquet_schema``
+does that once per file version and serves every later read of the same
+path with ``spark.read.schema(cached).parquet(path)``, which only plans.
+What is cached is metadata only — a ``StructType`` per table here, and the
+planned scan-partition count (``_scan_parts``) and row count
+(``streaming.queries._table_rows``) elsewhere — never data, a DataFrame
+or a result.  Every key includes ``file_fingerprint(path)``: the relative
+name, ``mtime_ns`` and size of every ``*.parquet`` data file under the
+path, so rewriting, adding or removing any data file (also inside a
+directory-layout table, whose directory stat does not change when a part
+file is rewritten in place) misses the cache and re-reads the metadata.
+The schema key also carries the session confs that change parquet schema
+inference (``_SCHEMA_CONFS``), so a session that infers differently never
+sees another session's schema.  Nothing is served past a file change.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -109,6 +128,9 @@ def table(
 ) -> DataFrame:
     """Load one testdata table as a DataFrame (lazy parquet scan).
 
+    The scan is given the table's cached schema (``parquet_schema``), so
+    only the first call per file version launches a Spark job.
+
     ``events.ts`` is truncated to millisecond precision; oracle SQL mirrors
     this with ``date_trunc('milliseconds', ts)`` so both engines compare
     equal bits (see ``events_ts_ms``).
@@ -129,15 +151,13 @@ def table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        path = f"{sf_dir}/{name}.parquet"
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return events_ts_ms(
-            spark.read.parquet(path), long_divisor=events_long_ts_divisor(path)
-        )
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    if name == "events":
+        return events_ts_ms(df, long_divisor=events_long_ts_divisor(path))
     key = _SPREAD_KEYS.get(name)
     if key is not None and spread:
         from kafka_spark_streaming_eval_spark.session import spread_small_scan
@@ -146,11 +166,60 @@ def table(
     return df
 
 
-# (path, mtime_ns, size, split conf) -> planned scan partition count.  The
+def file_fingerprint(path: str) -> tuple:
+    """(relative name, mtime_ns, size) of every ``*.parquet`` data file
+    under ``path`` — the file itself for the single-file layout, every part
+    file at any depth for a directory (partitioned) layout.  The one
+    freshness key of every metadata cache over a table path."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for fname in files:
+            if fname.endswith(".parquet"):
+                full = os.path.join(root, fname)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(out))
+
+
+# Session confs that change what schema parquet inference produces for the
+# same file (TIMESTAMP(NANOS) as long, binary as string, INT96 and
+# timestamp-NTZ mapping, footer merging, field-name case).  Read with
+# ``conf.get(key)`` and no default: typed confs reject a string default.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Inferred schema of the parquet table at ``path``, inferred once per
+    (path, file version, inference confs).  The first call runs Spark's own
+    inference (one footer-reading job); later calls launch nothing, and a
+    reader given this schema (``spark.read.schema(s).parquet(path)``) only
+    plans.  Equal to ``spark.read.parquet(path).schema`` by construction."""
+    key = (
+        path,
+        file_fingerprint(path),
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return schema
+
+
+# (path, file fingerprint, split conf) -> planned scan partition count.  The
 # probe costs ~45 ms of physical planning per call (df.rdd), and table()
-# runs several times per query build; the layout of a given file cannot
-# change without its (mtime, size) changing.  The planner's split count
-# ALSO depends on session conf (ADVICE r14: maxPartitionBytes and the
+# runs several times per query build.  The planner's split count ALSO
+# depends on session conf (ADVICE r14: maxPartitionBytes and the
 # parallelism-derived openCost packing), so those ride the key — a value
 # cached under one session's conf can't leak into a session planned
 # differently in the same process.
@@ -158,19 +227,14 @@ _SCAN_PARTS_CACHE: dict[tuple, int] = {}
 
 
 def _scan_parts(df: DataFrame, path: str) -> int:
-    import os
-
-    st = os.stat(path)
     sess = df.sparkSession
-    try:
-        conf_key = (
-            sess.conf.get("spark.sql.files.maxPartitionBytes", ""),
-            sess.conf.get("spark.sql.files.openCostInBytes", ""),
-            sess.sparkContext.defaultParallelism,
-        )
-    except Exception:
-        conf_key = ()
-    k = (path, st.st_mtime_ns, st.st_size, conf_key)
+    k = (
+        path,
+        file_fingerprint(path),
+        sess.conf.get("spark.sql.files.maxPartitionBytes"),
+        sess.conf.get("spark.sql.files.openCostInBytes"),
+        sess.sparkContext.defaultParallelism,
+    )
     n = _SCAN_PARTS_CACHE.get(k)
     if n is None:
         n = _SCAN_PARTS_CACHE[k] = df.rdd.getNumPartitions()

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from kafka_spark_streaming_eval_spark.catalog import table
+from kafka_spark_streaming_eval_spark.catalog import parquet_schema, table
 from kafka_spark_streaming_eval_spark.operators.dedup import shingle_rows
 from kafka_spark_streaming_eval_spark.plans.registry import register
 from kafka_spark_streaming_eval_spark.session import iter_checkpoint, prep
@@ -165,7 +165,7 @@ def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFr
     try:
         bench.count()  # materialize before the first trigger
 
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         # 2 files per trigger (VERDICT r14 item 5): the bounded replay's
         # per-micro-batch cost is planning + state load/commit, which at
         # sf0.1 dominates the map work — its 8->32-core ratio was 0.84

@@ -23,7 +23,12 @@ from pyspark.sql import functions as F
 
 from kafka_spark_streaming_eval_spark.catalog import table
 from kafka_spark_streaming_eval_spark.plans.registry import register
-from kafka_spark_streaming_eval_spark.session import iter_checkpoint, prep
+from kafka_spark_streaming_eval_spark.session import (
+    INTASK_MAX_EDGES,
+    counted_checkpoint,
+    iter_checkpoint,
+    prep,
+)
 
 N_HASHES = 12  # minhash signature length
 BAND_SIZE = 3  # rows per LSH band -> 4 bands
@@ -287,13 +292,6 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_candidate_pairs(_docs(spark, sf_dir))
 
 
-# In-task connected-components gate: below this many (directed) edge rows
-# the label loop collapses into one union-find task (see
-# dedup_cluster_components).  Mirrors graph.PR_INTASK_MAX_EDGES; a 100 TB
-# corpus' candidate graph exceeds it and takes the distributed loop.
-CC_INTASK_MAX_EDGES = 1_000_000
-
-
 def _components_intask():
     """Union-find over the (u, v) edge batches of ONE task: exact connected
     components with component_id = min doc_id per component (union always
@@ -387,17 +385,18 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows the r14 version did (which checkpointed the doubled union — its
     # two branches also each replanned the pair build; A/B at sf0.1:
     # med 1.84 -> 1.70 s with the in-task path below).
-    pairs = iter_checkpoint(lsh_candidate_pairs(_docs(spark, sf_dir)))
+    pairs, n_pairs = counted_checkpoint(lsh_candidate_pairs(_docs(spark, sf_dir)))
     # Tiny-graph fast path (r15, guide §2.4/§2.6 — same move as
     # graph_pagerank_trade): the r14 loop spent its time in per-round join
     # jobs + checkpoints on a ~500-edge graph (phase A/B at sf0.1: pair
-    # build ~60%, loop ~35%, tail ~10% of 1.5 s).  Below CC_INTASK_MAX_EDGES
+    # build ~60%, loop ~35%, tail ~10% of 1.5 s).  Below INTASK_MAX_EDGES
     # the loop + component-size agg + final join collapse into ONE
     # union-find task over the already-checkpointed pairs — exact closure,
     # the very fixed point the capped loop approximates (interleaved A/B at
-    # sf0.1: med 2.17 -> 1.46 s).  The count is a tiny job on checkpointed
-    # data; at 100 TB the distributed loop below takes over unchanged.
-    if pairs.count() * 2 <= CC_INTASK_MAX_EDGES:
+    # sf0.1: med 2.17 -> 1.46 s).  The pair count comes with the
+    # checkpoint's job; at 100 TB the distributed loop below takes over
+    # unchanged.
+    if n_pairs * 2 <= INTASK_MAX_EDGES:
         return (
             pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
             .coalesce(1)

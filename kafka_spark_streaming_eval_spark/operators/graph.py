@@ -26,22 +26,16 @@ from pyspark.sql import functions as F
 from kafka_spark_streaming_eval_spark.catalog import table
 from kafka_spark_streaming_eval_spark.functions.numeric import dsum, dsum_sql
 from kafka_spark_streaming_eval_spark.plans.registry import register
-from kafka_spark_streaming_eval_spark.session import iter_checkpoint, prep
+from kafka_spark_streaming_eval_spark.session import (
+    INTASK_MAX_EDGES,
+    counted_checkpoint,
+    iter_checkpoint,
+    prep,
+)
 
 PR_ITERS = 15
 PR_DAMP = 0.85  # literal 0.85/0.15 mirrored as CAST(... AS DOUBLE) in SQL
 _Q = "1e15"  # contribution quantization grid
-
-# Edge-count ceiling for the single-task vectorized loop (guide §2.4 /
-# VERDICT r14 item 4 "collapse the quantized-sum contract into fewer
-# jobs"): below this, the WHOLE 15-iteration loop runs as ONE Python task
-# over the 1-partition frac table instead of 15 driver-sequenced
-# join+agg rounds (each a broadcast build) plus 3 eager checkpoints.
-# frac carries at most edges + 2*edges rows (every node appears on some
-# edge, one self-loop row per node), so 1M edges bounds the task at ~3M
-# rows (~100 MB, sub-second in numpy) — far above any graph whose loop
-# overhead dominates, far below one that needs the cluster.
-PR_INTASK_MAX_EDGES = 1_000_000
 
 
 def _pagerank_intask(n_iters: int, damp: float):
@@ -175,7 +169,7 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node count, first rank checkpoint).  One corpus scan total now; the
     # checkpointed state is O(nodes^2), never corpus-sized (r14, guide §2.4
     # "remove shuffles outright" applied to repeated lineage).
-    base = iter_checkpoint(trade_edges(spark, sf_dir))
+    base, m_edges = counted_checkpoint(trade_edges(spark, sf_dir))
     nodes = (
         base.select("src").union(base.select(F.col("dst").alias("src"))).distinct()
     )
@@ -196,13 +190,14 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tiny-graph fast path (guide §2.4, VERDICT r14 item 4): the r14 loop
     # spent its time in 15 per-iteration broadcast builds + 3 eager
     # checkpoints, not shuffles (phase A/B at sf0.1: loop segment ~3.3 s of
-    # the 3.7 s total).  Below PR_INTASK_MAX_EDGES the whole loop runs as
+    # the 3.7 s total).  Below INTASK_MAX_EDGES the whole loop runs as
     # one vectorized task over the checkpointed 1-partition frac — same
     # trajectory bit-for-bit (see _pagerank_intask), one job instead of
     # ~18.  The checkpoint stays so the returned plan is a checkpoint scan
-    # (no Join), keeping Catalyst analysis flat exactly as before.
-    m_edges = base.count()  # tiny job on the checkpointed edge table
-    if m_edges <= PR_INTASK_MAX_EDGES:
+    # (no Join), keeping Catalyst analysis flat exactly as before.  frac
+    # carries at most 3 rows per edge (every node appears on some edge, one
+    # self-loop row per node); m_edges came with base's checkpoint job.
+    if m_edges <= INTASK_MAX_EDGES:
         frac1 = iter_checkpoint(frac.coalesce(1))
         return frac1.mapInPandas(
             _pagerank_intask(PR_ITERS, PR_DAMP), "node string, pagerank double"

@@ -240,3 +240,26 @@ def iter_checkpoint(df, eager: bool = True):
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+# Edge-count ceiling for the single-task in-memory paths of the iterative
+# graph operators (PageRank, connected components): below it the whole
+# loop runs as ONE Python task over a 1-partition edge table instead of
+# driver-sequenced join+agg rounds.  1M edges bounds that task at a few
+# million rows (~100 MB, sub-second in numpy) — far above any graph whose
+# loop overhead dominates, far below one that needs the cluster.
+INTASK_MAX_EDGES = 1_000_000
+
+
+def counted_checkpoint(df):
+    """``iter_checkpoint(df)`` plus its exact row count, as ``(df, n)``.
+
+    The count rides the checkpoint's own job as a ``DataFrame.observe``
+    metric, so routing on it (e.g. against ``INTASK_MAX_EDGES``) costs no
+    extra job, where a ``.count()`` on the checkpoint would launch one."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    out = iter_checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return out, obs.get["n"]

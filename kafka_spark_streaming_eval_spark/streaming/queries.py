@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from kafka_spark_streaming_eval_spark.catalog import (
     events_long_ts_divisor,
     events_ts_ms,
+    file_fingerprint,
+    parquet_schema,
     table,
 )
 from kafka_spark_streaming_eval_spark.functions.numeric import davg, davg_sql, dsum, dsum_sql
@@ -67,12 +69,10 @@ def _ensure_staged(d: str, build) -> str:
 
 
 def _src_fingerprint(path: str) -> str:
-    """mtime+size content key: a regenerated testdata file at the same path
-    gets a fresh staging dir, so cached sentinels/symlinks can't go stale."""
-    import os
-
-    st = os.stat(path)
-    return f"{st.st_mtime_ns}_{st.st_size}"
+    """Content key over every data file (``catalog.file_fingerprint``): a
+    regenerated testdata file or part file at the same path gets a fresh
+    staging dir, so cached sentinels/symlinks can't go stale."""
+    return repr(file_fingerprint(path))
 
 
 def _stream_dir(sf_dir: str, name: str) -> str:
@@ -116,7 +116,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference')."""
     prep(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, "events"))
     return events_ts_ms(
         raw, long_divisor=events_long_ts_divisor(f"{sf_dir}/events.parquet")
@@ -165,7 +165,7 @@ def _stream_session(
     return iso
 
 
-_TABLE_ROWS_CACHE: dict[str, int] = {}
+_TABLE_ROWS_CACHE: dict[tuple, int] = {}
 
 
 def _table_rows(sf_dir: str, name: str) -> int:
@@ -181,21 +181,13 @@ def _table_rows(sf_dir: str, name: str) -> int:
     import pyarrow.parquet as pa_pq
 
     path = f"{sf_dir}/{name}.parquet"
-    st = os.stat(path)
-    key = f"{path}|{st.st_mtime_ns}|{st.st_size}"
-    n = _TABLE_ROWS_CACHE.get(key)
+    fp = file_fingerprint(path)
+    n = _TABLE_ROWS_CACHE.get((path, fp))
     if n is None:
-        if os.path.isdir(path):
-            n = 0
-            for root, _dirs, files in os.walk(path):
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        n += pa_pq.ParquetFile(
-                            os.path.join(root, fname)
-                        ).metadata.num_rows
-        else:
-            n = pa_pq.ParquetFile(path).metadata.num_rows
-        _TABLE_ROWS_CACHE[key] = n
+        root = path if os.path.isdir(path) else os.path.dirname(path)
+        n = _TABLE_ROWS_CACHE[(path, fp)] = sum(
+            pa_pq.ParquetFile(os.path.join(root, f[0])).metadata.num_rows for f in fp
+        )
     return n
 
 
@@ -605,7 +597,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     iso = _stream_session(spark, 2 * _table_rows(sf_dir, "events"))
     iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     staged = _left_outer_staged_dir(iso, sf_dir)
-    schema = iso.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(iso, f"{sf_dir}/events.parquet")
 
     def side() -> DataFrame:
         raw = (
@@ -823,7 +815,7 @@ def stream_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     d = _ensure_staged(
         scratch_dir("stream_merge_src", sf_dir, _src_fingerprint(src)), build
     )
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

@@ -173,7 +173,7 @@ def test_pagerank_intask_matches_dataframe_loop(spark, monkeypatch):
     from tests.conftest import SF_DIR
 
     fast = {r.node: r.pagerank for r in G.graph_pagerank_trade(spark, SF_DIR).collect()}
-    monkeypatch.setattr(G, "PR_INTASK_MAX_EDGES", -1)
+    monkeypatch.setattr(G, "INTASK_MAX_EDGES", -1)
     slow = {r.node: r.pagerank for r in G.graph_pagerank_trade(spark, SF_DIR).collect()}
     assert fast == slow  # exact float equality, not approx
     assert len(fast) > 0
@@ -188,7 +188,7 @@ def test_components_intask_matches_label_loop(spark, monkeypatch):
     from tests.conftest import SF_DIR
 
     fast = sorted(map(tuple, D.dedup_cluster_components(spark, SF_DIR).collect()))
-    monkeypatch.setattr(D, "CC_INTASK_MAX_EDGES", -1)
+    monkeypatch.setattr(D, "INTASK_MAX_EDGES", -1)
     slow = sorted(map(tuple, D.dedup_cluster_components(spark, SF_DIR).collect()))
     assert fast == slow
     assert len(fast) > 0
