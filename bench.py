@@ -434,32 +434,29 @@ def budget_stdout_payload(full: dict, limit: int = STDOUT_BUDGET) -> dict:
     all_q = dict(full.get("queries", {}))
     slim["queries"] = {}
     slim["queries_n"] = len(all_q)
-    slim["queries_omitted"] = len(all_q)
-    # fast path: the complete query set with no truncation pointer — the
-    # slowest-prefix loop below can wedge 1-2 queries short of this because
-    # its intermediate candidates carry the 36-char queries_full pointer
-    whole = dict(slim)
-    whole["queries"] = {n: round(s, 2) for n, s in all_q.items()}
-    whole["queries_omitted"] = 0
-    if len(_enc(whole)) <= limit:
+    slim["queries_omitted"] = 0
+    # the complete set first: it carries no truncation pointer, so it can
+    # fit where the pointer-carrying prefix fill below stops 1-2 queries short
+    whole = {**slim, "queries": {n: round(s, 2) for n, s in all_q.items()}}
+    if not all_q or len(_enc(whole)) <= limit:
         slim = whole
-    # fill slowest-first by RAW value so the kept set is the slowest prefix;
-    # emitted values are 2-dp (the sidecar keeps full precision)
-    for name, sec in sorted(all_q.items(), key=lambda kv: (-kv[1], kv[0])):
-        if not slim["queries_omitted"]:
-            break
-        candidate = dict(slim)
-        candidate["queries"] = {**slim["queries"], name: round(sec, 2)}
-        candidate["queries_omitted"] = len(all_q) - len(candidate["queries"])
-        if candidate["queries_omitted"]:
-            candidate["queries_full"] = DETAILS_FILE
-        else:
-            candidate.pop("queries_full", None)
-        if len(_enc(candidate)) > limit:
-            break
-        slim = candidate
-    if slim["queries_omitted"]:
-        slim["queries_full"] = DETAILS_FILE
+    else:
+        # Some query is omitted, so the line names the sidecar.  The pointer
+        # is counted before any query is fitted; when even it does not fit,
+        # no query does and queries_omitted alone flags the gap.
+        slim["queries_omitted"] = len(all_q)
+        pointed = {**slim, "queries_full": DETAILS_FILE}
+        if len(_enc(pointed)) <= limit:
+            slim = pointed
+            # fill slowest-first by RAW value so the kept set is the slowest
+            # prefix; emitted values are 2-dp (the sidecar keeps full
+            # precision)
+            for name, sec in sorted(all_q.items(), key=lambda kv: (-kv[1], kv[0])):
+                candidate = {**slim, "queries": {**slim["queries"], name: round(sec, 2)}}
+                candidate["queries_omitted"] -= 1
+                if len(_enc(candidate)) > limit:
+                    break
+                slim = candidate
     for key in STDOUT_OPTIONAL_SCALARS:
         if key not in full or key in slim:
             continue
@@ -503,6 +500,43 @@ def throughput_eps(spark) -> tuple[float, dict]:
         wire.unpersist()
 
 
+def _steal_quiet(steal: dict) -> bool:
+    """True iff a StealMeter dict attests a quiet span (measured, below the
+    gate).  available=False and steal_pct=None are both NOT quiet — they
+    are weather-unknown, which can never clear a gate."""
+    return bool(
+        steal.get("available")
+        and steal.get("steal_pct") is not None
+        and steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
+    )
+
+
+def _gated(attempt, retries: int, label: str) -> list[dict]:
+    """The steal gate shared by every bench phase: run ``attempt(i)`` (a
+    record carrying the span's StealMeter dict under ``steal``) until a span
+    is quiet, at most ``1 + retries`` times, and return every record.  A
+    weather-unknown span (available=False, or steal_pct=None from a zero
+    total-tick delta over a very short span) is kept and never retried
+    (ADVICE r13).  A record without ``steal`` is a failed attempt: it uses
+    up an attempt and the loop goes on."""
+    attempts: list[dict] = []
+    for i in range(1 + retries):
+        attempts.append(attempt(i))
+        steal = attempts[-1].get("steal")
+        if steal is None:
+            continue
+        if (not steal.get("available") or steal.get("steal_pct") is None
+                or _steal_quiet(steal)):
+            break
+        if i < retries:
+            print(
+                f"bench: {label} attempt {i + 1} saw {steal['steal_pct']}% "
+                f"steal (> gate {THROUGHPUT_STEAL_GATE_PCT}%); retrying",
+                file=sys.stderr,
+            )
+    return attempts
+
+
 def throughput_eps_gated(spark) -> tuple[float, dict]:
     """throughput_eps with the weather gate (VERDICT r11 item 1): when the
     measured span saw more than THROUGHPUT_STEAL_GATE_PCT hypervisor steal,
@@ -517,38 +551,13 @@ def throughput_eps_gated(spark) -> tuple[float, dict]:
     a least-steal selector kept the 68k artifact).  gate_cleared records
     whether the KEPT attempt's own span was quiet — a false value flags
     that even the max may understate capacity.  Returns (eps, provenance)
-    with every attempt's eps + steal recorded.  With /proc/stat
-    unavailable the first attempt is kept and marked weather-unknown
-    rather than retried forever."""
-    attempts: list[dict] = []
-    for i in range(1 + THROUGHPUT_STEAL_RETRIES):
+    with every attempt's eps + steal recorded."""
+
+    def attempt(_i: int) -> dict:
         eps, steal = throughput_eps(spark)
-        attempts.append({"eps": round(eps, 1), "steal": steal})
-        if not steal.get("available"):
-            break
-        if steal.get("steal_pct") is None:
-            # zero total-tick delta over a very short span: weather-UNKNOWN,
-            # not stormy — keep the attempt rather than burning every retry
-            # on a span /proc/stat cannot resolve (ADVICE r13).
-            break
-        if steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT:
-            break
-        if i < THROUGHPUT_STEAL_RETRIES:
-            print(
-                f"bench: throughput attempt {i + 1} saw "
-                f"{steal.get('steal_pct')}% steal (> gate "
-                f"{THROUGHPUT_STEAL_GATE_PCT}%); retrying",
-                file=sys.stderr,
-            )
+        return {"eps": round(eps, 1), "steal": steal}
 
-    def _quiet(a: dict) -> bool:
-        s = a["steal"]
-        return bool(
-            s.get("available")
-            and s.get("steal_pct") is not None
-            and s["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
-        )
-
+    attempts = _gated(attempt, THROUGHPUT_STEAL_RETRIES, "throughput")
     # Anomaly retry (VERDICT r13 item 3): r13's attempt 2 measured 210k eps
     # at 0.048% steal against attempt 1's 1.47M at 0.538% — a QUIET span 7x
     # slower than a noisy one means something besides steal governed it
@@ -558,12 +567,12 @@ def throughput_eps_gated(spark) -> tuple[float, dict]:
     # gate_cleared can be EARNED by a quiet-and-fast span rather than
     # waived; without it the gate breaks on the first quiet attempt no
     # matter how implausibly slow it is.
-    anomaly_retry = False
-    quiet_eps = [a["eps"] for a in attempts if _quiet(a)]
-    if quiet_eps and max(a["eps"] for a in attempts) > 2 * max(quiet_eps):
-        anomaly_retry = True
-        eps, steal = throughput_eps(spark)
-        attempts.append({"eps": round(eps, 1), "steal": steal})
+    quiet_eps = [a["eps"] for a in attempts if _steal_quiet(a["steal"])]
+    anomaly_retry = bool(
+        quiet_eps and max(a["eps"] for a in attempts) > 2 * max(quiet_eps)
+    )
+    if anomaly_retry:
+        attempts.append(attempt(len(attempts)))
 
     kept = max(range(len(attempts)), key=lambda i: attempts[i]["eps"])
     provenance = {
@@ -571,7 +580,7 @@ def throughput_eps_gated(spark) -> tuple[float, dict]:
         "kept_attempt": kept + 1,
         "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
         "anomaly_retry": anomaly_retry,
-        "gate_cleared": _quiet(attempts[kept]),
+        "gate_cleared": _steal_quiet(attempts[kept]["steal"]),
     }
     return attempts[kept]["eps"], provenance
 
@@ -594,49 +603,27 @@ def walltime_phase_gated(
     run_phase, retries: int, label: str
 ) -> tuple[dict[str, float], dict]:
     """Run a timing phase with the steal gate: ``run_phase(attempt_idx)``
-    returns a ``{query: seconds}`` dict; when the phase's span saw more
-    than THROUGHPUT_STEAL_GATE_PCT hypervisor steal it is re-run (up to
+    returns a ``{query: seconds}`` dict; a stormy phase is re-run (up to
     ``retries`` extra passes) and the attempt with the LOWEST total is
     kept.  Returns (kept timings, provenance) with every attempt's total +
     steal recorded; gate_cleared says whether the KEPT attempt's own span
-    was quiet.  /proc/stat unavailable => first attempt kept,
-    weather-unknown, never an infinite retry."""
-    attempts: list[dict] = []
+    was quiet."""
     results: list[dict[str, float]] = []
-    for i in range(1 + retries):
+
+    def attempt(i: int) -> dict:
         meter = StealMeter()
-        timings = run_phase(i)
+        results.append(run_phase(i))
         steal = meter.finish()
-        attempts.append({"total_s": round(sum(timings.values()), 4), "steal": steal})
-        results.append(timings)
-        if not steal.get("available"):
-            break
-        if steal.get("steal_pct") is None:
-            # zero total-tick delta over a very short span: weather-UNKNOWN,
-            # not stormy — keep, gate_cleared False, don't burn the retries
-            # (ADVICE r13; matches the available=False path).
-            break
-        if steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT:
-            break
-        if i < retries:
-            print(
-                f"bench: {label} attempt {i + 1} saw "
-                f"{steal.get('steal_pct')}% steal "
-                f"(> gate {THROUGHPUT_STEAL_GATE_PCT}%); retrying",
-                file=sys.stderr,
-            )
+        return {"total_s": round(sum(results[-1].values()), 4), "steal": steal}
+
+    attempts = _gated(attempt, retries, label)
     kept = min(range(len(attempts)), key=lambda i: attempts[i]["total_s"])
-    kept_steal = attempts[kept]["steal"]
     provenance = {
         "attempts": attempts,
         "kept_attempt": kept + 1,
         "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
         "selector": "min-total",
-        "gate_cleared": bool(
-            kept_steal.get("available")
-            and kept_steal.get("steal_pct") is not None
-            and kept_steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
-        ),
+        "gate_cleared": _steal_quiet(attempts[kept]["steal"]),
     }
     return results[kept], provenance
 
@@ -663,17 +650,6 @@ def _run_stream_subprocess(timeout: float = 300.0) -> dict:
     return payload
 
 
-def _steal_quiet(steal: dict) -> bool:
-    """True iff a StealMeter dict attests a quiet span (measured, below the
-    gate).  available=False and steal_pct=None are both NOT quiet — they
-    are weather-unknown, which can never clear a gate."""
-    return bool(
-        steal.get("available")
-        and steal.get("steal_pct") is not None
-        and steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
-    )
-
-
 def stream_phase_gated() -> tuple[dict | None, dict]:
     """The streaming phase under the steal gate (VERDICT r13 item 2 — this
     was the last ungated bench phase; r13's three streaming numbers ran at
@@ -694,8 +670,8 @@ def stream_phase_gated() -> tuple[dict | None, dict]:
     Returns ``(metrics, provenance)``; metrics is None when no attempt
     produced a valid payload (caller falls back to the in-process path,
     recording its own steal under ``fallback_steal``)."""
-    attempts: list[dict] = []
-    for i in range(1 + STREAM_STEAL_RETRIES):
+
+    def attempt(i: int) -> dict:
         try:
             payload = _run_stream_subprocess()
         except Exception as exc:
@@ -703,31 +679,18 @@ def stream_phase_gated() -> tuple[dict | None, dict]:
                 f"bench: --stream-only attempt {i + 1} failed ({exc!r})",
                 file=sys.stderr,
             )
-            attempts.append({"valid": False, "err": repr(exc)[:300]})
-            continue
-        steal = payload.get("stream_steal") or {"available": False}
-        attempts.append(
-            {
-                "valid": True,
-                "sustained_eps": payload["stream_sustained_eps"],
-                "p95_ms": payload["stream_p95_latency_ms"],
-                "recovery_s": payload["recovery_s"],
-                "batches": payload.get("stream_batches"),
-                "gate": payload.get("stream_gate"),
-                "steal": steal,
-            }
-        )
-        if not steal.get("available") or steal.get("steal_pct") is None:
-            break  # weather-unknown: keep, never retry forever (ADVICE r13)
-        if steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT:
-            break
-        if i < STREAM_STEAL_RETRIES:
-            print(
-                f"bench: stream attempt {i + 1} saw {steal['steal_pct']}% "
-                f"steal (> gate {THROUGHPUT_STEAL_GATE_PCT}%); retrying",
-                file=sys.stderr,
-            )
+            return {"valid": False, "err": repr(exc)[:300]}
+        return {
+            "valid": True,
+            "sustained_eps": payload["stream_sustained_eps"],
+            "p95_ms": payload["stream_p95_latency_ms"],
+            "recovery_s": payload["recovery_s"],
+            "batches": payload.get("stream_batches"),
+            "gate": payload.get("stream_gate"),
+            "steal": payload.get("stream_steal") or {"available": False},
+        }
 
+    attempts = _gated(attempt, STREAM_STEAL_RETRIES, "stream")
     provenance: dict = {
         # per-attempt records minus the bulky stream_gate timeline (the kept
         # attempt's gate ships as the payload's top-level stream_gate)
@@ -737,7 +700,7 @@ def stream_phase_gated() -> tuple[dict | None, dict]:
         "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
         "selector": "max-sustained/min-p95/min-recovery",
     }
-    idx_valid = [i for i, a in enumerate(attempts) if a.get("valid")]
+    idx_valid = [i for i, a in enumerate(attempts) if a["valid"]]
     if not idx_valid:
         provenance.update(kept=None, gate_cleared=None)
         return None, provenance

@@ -76,33 +76,27 @@ def _src_fingerprint(path: str) -> str:
 
 
 def _stream_dir(sf_dir: str, name: str) -> str:
-    """The parquet file-stream source needs a flat *directory* of data
-    files; stage one with symlinks to the (read-only) testdata.
-
-    Handles both table layouts (VERDICT r14 item 1): a single parquet file
-    (driver testdata — one symlink) and a directory of part files (every
-    Spark-written table — one symlink per part file, flattened, because the
-    file stream source does not recurse into subdirectories by default)."""
+    """The parquet file-stream source needs a directory of data files;
+    stage one with symlinks to the (read-only) testdata, one per file of
+    ``catalog.file_fingerprint`` — the file of a single-file table, or
+    every part file of a directory layout at its relative path, so the
+    file source discovers the same ``key=value`` partition columns as the
+    batch reader."""
     import os
 
     from kafka_spark_streaming_eval_spark.session import scratch_dir
 
     src = f"{sf_dir}/{name}.parquet"
-    d = scratch_dir("stream_src", sf_dir, name, _src_fingerprint(src))
+    files = file_fingerprint(src)
+    base = src if os.path.isdir(src) else os.path.dirname(src)
+    d = scratch_dir("stream_src", sf_dir, name, repr(files))
 
     def build(d: str) -> None:
-        targets = (
-            [
-                (os.path.join(src, f), f)
-                for f in sorted(os.listdir(src))
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(src)
-            else [(src, f"{name}.parquet")]
-        )
-        for target, link_name in targets:
+        for rel, _mtime, _size in files:
+            link = os.path.join(d, rel)
+            os.makedirs(os.path.dirname(link), exist_ok=True)
             try:
-                os.symlink(target, os.path.join(d, link_name))
+                os.symlink(os.path.join(base, rel), link)
             except FileExistsError:
                 pass  # leftover from an interrupted build; same target
 

@@ -860,3 +860,28 @@ def test_read_pressure_totals_shape():
     if got is not None:
         assert set(got) == {"cpu_some", "io_some", "io_full"}
         assert all(isinstance(v, int) and v >= 0 for v in got.values())
+
+
+def test_budget_counts_sidecar_pointer_before_queries():
+    """Contract fields plus a reserved scalar that leave room for the bare
+    line but not for the ``queries_full`` pointer: the pointer must be
+    counted before any query is fitted, never appended past the budget.
+    When even the pointer does not fit, no query is kept and
+    ``queries_omitted`` alone flags the gap."""
+    full = {
+        "metric": "headline_queries_total",
+        "value": 41.1,
+        "unit": "sec",
+        "sf": 0.1,
+        "stream_sustained_eps": "9" * 1830,
+        "queries": {"qa": 1.0, "qb": 2.0},
+    }
+    bare = {**full, "queries": {}, "queries_n": 2, "queries_omitted": 2}
+    assert len(bench._enc(bare)) <= bench.STDOUT_BUDGET
+    assert len(bench._enc({**bare, "queries_full": bench.DETAILS_FILE})) > bench.STDOUT_BUDGET
+
+    slim = bench.budget_stdout_payload(full)
+    assert len(bench._enc(slim)) <= bench.STDOUT_BUDGET
+    assert slim["stream_sustained_eps"] == full["stream_sustained_eps"]
+    assert slim["queries"] == {} and slim["queries_omitted"] == 2
+    assert "queries_full" not in slim

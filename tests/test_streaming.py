@@ -617,3 +617,26 @@ def test_stream_tumbling_counts_on_directory_layout_events(spark, tmp_path):
     out = all_queries()["stream_tumbling_counts"].fn(spark, d).collect()
     assert sum(r.n for r in out) == 200
     assert {r.event_type for r in out} == {"click", "view"}
+
+
+def test_events_stream_reads_partitioned_directory_layout(spark, tmp_path):
+    """A partitioned events table (``events.parquet/event_type=…/part-*``)
+    streams every row the batch reader sees: the staged source keeps each
+    part file's relative path, so the file source discovers the same
+    ``key=value`` partition column instead of staging zero files."""
+    from kafka_spark_streaming_eval_spark.catalog import table
+    from kafka_spark_streaming_eval_spark.streaming.queries import (
+        _events_stream,
+        _run_to_table,
+        _stream_session,
+    )
+    from tests.conftest import SF_DIR
+
+    d = str(tmp_path / "sf_partitioned")
+    spark.read.parquet(f"{SF_DIR}/events.parquet").write.partitionBy(
+        "event_type"
+    ).parquet(d + "/events.parquet")
+    batch = table(spark, d, "events")
+    streamed = _run_to_table(_events_stream(_stream_session(spark), d), "append")
+    assert streamed.count() == batch.count() > 0
+    assert sorted(streamed.columns) == sorted(batch.columns)
