@@ -491,7 +491,7 @@ def throughput_eps(spark) -> tuple[float, dict]:
         best = 0.0
         for _ in range(2):  # first pass doubles as warm-up (BASELINE methodology)
             t0 = time.perf_counter()
-            row = batch_metrics(parse_events(wire), batch_id=0).collect()[0]
+            row = batch_metrics(parse_events(wire), batch_id=0)
             wall = time.perf_counter() - t0
             assert row.batch_events == THROUGHPUT_EVENTS
             best = max(best, THROUGHPUT_EVENTS / wall)

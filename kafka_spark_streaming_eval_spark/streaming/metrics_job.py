@@ -9,12 +9,27 @@ mean/p50/p95/p99 latency) via ``foreachBatch`` into a CSV directory
 Fixes over the reference (SURVEY §3.1 / §4 anti-patterns):
 - ONE fused aggregation per batch instead of 4 separate jobs
   (``rdd.isEmpty`` + ``count`` + ``approxQuantile`` + ``agg(avg)`` each
-  re-fetched the batch from Kafka).  ``percentile_approx`` computes all
-  three quantiles in the same pass as count/mean.
+  re-fetched the batch from Kafka).  One ``percentile_approx`` over an
+  array of percentages builds a single quantile sketch for p50/p95/p99 in
+  the same pass as the counts and the latency sum.
 - No ``rdd`` materialization for the empty check — the fused agg returns a
   zero row naturally and we skip the write on ``batch_events == 0``.
 - Sub-second latency precision (the reference truncated to whole seconds via
   ``unix_timestamp(current_timestamp())``).
+
+The aggregation reads ``created_ts`` only and carries no per-batch value:
+the sink time ``now`` (ms) is taken on the driver just before the
+``collect()`` — the instant ``current_timestamp()`` used to be fixed at —
+and applied to the aggregates afterwards.  Every latency is ``now -
+created_ts``: the sketch runs over ``-created_ts``, a translation that keeps
+every rank and tie, so ``p = now + q`` picks the same element; the mean
+comes from the exact long ``sum(created_ts - ANCHOR_MS)``.  A per-row
+``current_timestamp()`` was folded into a new long literal for every query,
+and codegen inlines long literals, so the per-row stage missed the codegen
+cache and was compiled again every micro-batch; without it the stage
+compiles once per stream.  The exact sum is bounded: ANSI ``sum`` raises
+once ``n * |created_ts - ANCHOR_MS|`` passes 2**63, i.e. past about 1.6e8
+events per batch at 2026 timestamps (5.7e10 ms after the anchor).
 
 Kafka I/O: the wire format and options mirror the reference
 (spark_stream_metrics.py:33-40); the connector jar is not in this runtime,
@@ -24,9 +39,10 @@ file/rate source — the plan downstream of the source is identical.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,6 +63,13 @@ METRICS_SCHEMA = (
     "mean_latency_ms DOUBLE, p50_latency_ms DOUBLE, "
     "p95_latency_ms DOUBLE, p99_latency_ms DOUBLE"
 )
+MetricsRow = Row(
+    "batch_id", "epoch_sec", "batch_events",
+    "mean_latency_ms", "p50_latency_ms", "p95_latency_ms", "p99_latency_ms",
+)
+
+# Offset for the exact latency sum: 2025-01-01T00:00:00Z in epoch ms.
+ANCHOR_MS = 1_735_689_600_000
 
 
 def kafka_source(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
@@ -112,30 +135,30 @@ def parse_events(
     return text.select(F.from_json("wire_str", schema).alias("e")).select("e.*")
 
 
-def latency_ms(now_ms: Column | None = None) -> Column:
-    """End-to-end latency: sink-time minus ``created_ts`` — ms precision
-    (the reference lost sub-second precision, spark_stream_metrics.py:49-52).
-    Pass a literal ``now_ms`` for deterministic tests."""
-    now = now_ms if now_ms is not None else F.unix_millis(F.current_timestamp())
-    return (now - F.col("created_ts")).cast("double")
-
-
-def batch_metrics(batch_df: DataFrame, batch_id: int, now_ms: Column | None = None) -> DataFrame:
-    """The fused per-batch summary: ONE aggregation job computes count, mean
-    and all three quantiles (vs the reference's 4 jobs + rescan)."""
-    lat = latency_ms(now_ms)
-    epoch = (
-        now_ms / 1000 if now_ms is not None else F.unix_millis(F.current_timestamp()) / 1000
+def batch_metrics(batch_df: DataFrame, batch_id: int, now_ms: int | None = None) -> Row:
+    """The fused per-batch summary: ONE aggregation job computes the counts,
+    the latency sum and one sketch for all three quantiles (vs the
+    reference's 4 jobs + rescan).  End-to-end latency is sink-time minus
+    ``created_ts`` at ms precision (the reference lost sub-second precision,
+    spark_stream_metrics.py:49-52); pass ``now_ms`` for deterministic tests.
+    Returns one ``MetricsRow``: its latency fields are None when no row
+    carries a ``created_ts``, and ``epoch_sec`` is None too for an empty
+    batch."""
+    ts = F.col("created_ts")
+    agg = batch_df.agg(
+        F.count(F.lit(1)),
+        F.count(ts),
+        F.sum(ts - F.lit(ANCHOR_MS)),
+        F.percentile_approx((-ts).cast("double"), [0.50, 0.95, 0.99], 10000),
     )
-    return batch_df.select(lat.alias("latency_ms")).agg(
-        F.lit(batch_id).cast("long").alias("batch_id"),
-        F.first(epoch.cast("long"), ignorenulls=False).alias("epoch_sec"),
-        F.count(F.lit(1)).alias("batch_events"),
-        F.avg("latency_ms").alias("mean_latency_ms"),
-        F.percentile_approx("latency_ms", 0.50, 10000).alias("p50_latency_ms"),
-        F.percentile_approx("latency_ms", 0.95, 10000).alias("p95_latency_ms"),
-        F.percentile_approx("latency_ms", 0.99, 10000).alias("p99_latency_ms"),
-    )
+    now = now_ms if now_ms is not None else time.time_ns() // 1_000_000
+    n, n_ts, off_sum, neg_q = agg.collect()[0]
+    if not n_ts:
+        lat = [None] * 4
+    else:
+        mean = ((now - ANCHOR_MS) * n_ts - off_sum) / n_ts
+        lat = [mean] + [now + q for q in neg_q]
+    return MetricsRow(batch_id, now // 1000 if n else None, n, *lat)
 
 
 @dataclass
@@ -152,7 +175,7 @@ class MetricsCollector:
     rows: list = field(default_factory=list)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        row = batch_metrics(batch_df, batch_id).collect()[0]
+        row = batch_metrics(batch_df, batch_id)
         if row.batch_events == 0:  # empty-batch short-circuit, post-agg
             return
         self.rows.append(row)

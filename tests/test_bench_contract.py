@@ -385,6 +385,25 @@ def test_steal_meter_monotone_and_bounded():
         assert bench.read_steal_ticks() is None
 
 
+def test_throughput_eps_runs_real_metrics_path(spark, monkeypatch):
+    """The BASELINE parse->metrics throughput, run for real on a small input:
+    the gate tests below replace ``throughput_eps``, so only this test sees
+    a change to the ``batch_metrics`` API it calls."""
+    monkeypatch.setattr(bench, "THROUGHPUT_EVENTS", 2000)
+    rows = []
+    real = bench.batch_metrics
+
+    def spy(*args, **kwargs):
+        rows.append(real(*args, **kwargs))
+        return rows[-1]
+
+    monkeypatch.setattr(bench, "batch_metrics", spy)
+    eps, steal = bench.throughput_eps(spark)
+    assert [r.batch_events for r in rows] == [2000, 2000]
+    assert eps > 0
+    assert "available" in steal
+
+
 def test_throughput_gate_keeps_max_eps_attempt(monkeypatch):
     """Under a steal burst the gate must retry and keep the attempt with
     the HIGHEST eps (steal can only slow the machine, so max is a valid

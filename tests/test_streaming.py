@@ -27,8 +27,7 @@ from kafka_spark_streaming_eval_spark.streaming.metrics_job import (
 def test_fused_batch_metrics(spark):
     """One fused agg computes the same stats the reference got from 4 jobs."""
     ev = synth_events_batch(spark, 5000)
-    now = F.lit(1_700_000_600_000)
-    row = batch_metrics(ev, batch_id=7, now_ms=now).collect()[0]
+    row = batch_metrics(ev, batch_id=7, now_ms=1_700_000_600_000)
     assert row.batch_id == 7
     assert row.batch_events == 5000
     # created_ts spans [base, base+5s); latency vs base+600s ∈ (595s, 600s]
